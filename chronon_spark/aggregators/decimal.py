@@ -75,10 +75,15 @@ _D = "__decd"  # double-upcast variant suffix
 
 
 def _rescale_sql(src: str, scale: int) -> str:
-    """Exact unscaled-long -> DECIMAL(38, scale) SQL fragment."""
+    """Exact unscaled-long -> DECIMAL(38, scale) SQL fragment.
+
+    The dividend is DECIMAL(19,0), just wide enough for any int64: Spark
+    sizes a quotient's scale from both operands' precisions, and with a
+    DECIMAL(38,0) dividend the result overflows precision 38, so Spark cuts
+    the quotient to scale 6 and rounds every scale >= 7 silently."""
     div = 10**scale
     return (
-        f"CAST(CAST({src} AS DECIMAL(38,0)) / CAST({div} AS DECIMAL({scale + 1},0)) "
+        f"CAST(CAST({src} AS DECIMAL(19,0)) / CAST({div} AS DECIMAL({scale + 1},0)) "
         f"AS DECIMAL(38,{scale}))"
     )
 

@@ -473,7 +473,7 @@ def run_conf_backfill(
     # TableUtils.scala:403-499 + JoinBase.scala:347-368): one Spark job per
     # contiguous run of up to step_days partitions; manifests stay per-ds so
     # resume granularity is unchanged.
-    from chronon_spark.plans.manifest import _parquet_rows, contiguous_ranges
+    from chronon_spark.plans.manifest import _parquet_rows, contiguous_ranges, range_stage_metrics
 
     spec_meta = {
         "join_parts": [
@@ -516,6 +516,7 @@ def run_conf_backfill(
             }
             part_paths = {ds: f"{out_path}/ds={ds}" for ds in ds_range}
         # manifests land only after the whole range's write committed
+        metrics = range_stage_metrics(ds_range, range_wall, ds_counts)
         for ds in ds_range:
             n_out = ds_out.get(ds, 0)
             total_out += n_out
@@ -529,11 +530,7 @@ def run_conf_backfill(
                 },
                 "output": {"path": part_paths[ds], "rows": n_out},
                 "spec": spec_meta,
-                "stage_metrics": {
-                    "wall_sec": range_wall,
-                    "range": [ds_lo, ds_hi],
-                    "range_days": len(ds_range),
-                },
+                "stage_metrics": metrics[ds],
                 "completed_at_unix": int(_time.time()),
             }
             tmp = os.path.join(checkpoint_dir, f".{ds}.json.tmp")

@@ -55,7 +55,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from chronon_spark.api import GroupBy, Op
-from chronon_spark.operators.asof_join import ensure_ts_us
+from chronon_spark.operators.asof_join import auto_buckets, ensure_ts_us
 from chronon_spark.resolution import tail_hop_millis
 from chronon_spark.types import part_output_type
 
@@ -479,7 +479,7 @@ def fetch_features(
     part_list = list(parts)
     integral = [isinstance(part_output_type(p, right_types[p.input_column]), T.LongType) for p in parts]
 
-    def one_key(q_ts: np.ndarray, ir_rec: dict | None, sidx: np.ndarray, SG: dict) -> dict:
+    def key_features(q_ts: np.ndarray, ir_rec: dict | None, sidx: np.ndarray, SG: dict) -> dict:
         """Merge ONE key's batch IR + tail hops + stream rows for its queries.
 
         All pandas work (sort, null masks, column extraction) happened once
@@ -857,7 +857,7 @@ def fetch_features(
         l_groups = lpdf.groupby(gb.keys, sort=False, dropna=False).indices
         for k, lidx in l_groups.items():
             kk = norm(k)
-            res = one_key(q_ts[lidx], ir_recs.get(kk), s_groups.get(kk, empty_idx), SG)
+            res = key_features(q_ts[lidx], ir_recs.get(kk), s_groups.get(kk, empty_idx), SG)
             for f, vals in res.items():
                 tgt = feat_cols[f]
                 # element-wise: a bulk fancy-index assign would coerce
@@ -872,11 +872,7 @@ def fetch_features(
     # coarse-bucket cogroup: one Arrow batch carries MANY keys (serving key
     # counts make per-key cogroup groups overhead-bound — the same lesson as
     # asof_join's coarse_buckets), per-key merge runs in-process above
-    try:
-        sp = int(l.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
-    except ValueError:  # "auto" under AQE-managed envs
-        sp = l.sparkSession.sparkContext.defaultParallelism or 64
-    n_buckets = max(sp * 4, 64)
+    n_buckets = auto_buckets(l.sparkSession)
     lb = l.withColumn("__fb", F.pmod(F.xxhash64(*gb.keys), F.lit(n_buckets)))
     rb = union.withColumn("__r___fb", F.pmod(F.xxhash64(*[f"__r_{c}" for c in gb.keys]), F.lit(n_buckets)))
     grouped = lb.groupby(F.col("__fb")).cogroup(rb.groupby(F.col("__r___fb")))

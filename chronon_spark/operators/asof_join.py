@@ -29,11 +29,10 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from chronon_spark.aggregators.kernels import (
     _US_D,
-    EventColumns,
     MultiKeyEventColumns,
-    _MapInput,
-    compute_parts,
+    composite_frame,
     compute_parts_multikey,
+    key_code_chunks,
 )
 from chronon_spark.api import Accuracy, GroupBy, Join, JoinPart
 from chronon_spark.types import part_output_type
@@ -137,6 +136,86 @@ def prefilter_right_keys(
     return right.join(F.broadcast(keys_df), on=right_keys, how="left_semi")
 
 
+def auto_buckets(spark) -> int:
+    """The ``"auto"`` coarse bucket count: 4× the session's shuffle
+    partitions, at least 64."""
+    try:
+        sp = int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
+    except ValueError:  # conf can be the string "auto" under AQE-managed envs
+        sp = spark.sparkContext.defaultParallelism or 64
+    return max(sp * 4, 64)
+
+
+def factorize_keys(
+    lpdf: pd.DataFrame, rpdf: pd.DataFrame, left_keys: list[str], right_keys: list[str]
+) -> tuple[np.ndarray, np.ndarray]:
+    """Joint integer codes of the left and right key tuples of one batch —
+    equal tuples share a code. A null single-column key gets −1; a partly
+    null tuple gets a code no event shares (events with null keys are
+    dropped before the cogroup). Either way its features are NULL."""
+    if len(left_keys) == 1:
+        joint = pd.concat([lpdf[left_keys[0]], rpdf[right_keys[0]]], ignore_index=True)
+        codes = pd.factorize(joint, use_na_sentinel=True)[0]
+    else:
+        arrays = [
+            pd.concat([lpdf[lk], rpdf[rk]], ignore_index=True)
+            for lk, rk in zip(left_keys, right_keys)
+        ]
+        codes = pd.MultiIndex.from_arrays(arrays).factorize()[0]
+    return codes[: len(lpdf)], codes[len(lpdf) :]
+
+
+def ts_us_array(pdf: pd.DataFrame) -> np.ndarray:
+    """The ``__ts_us`` column of one cogroup side as int64 (empty-safe)."""
+    return pdf[_TS_US].to_numpy(np.int64) if len(pdf) else np.empty(0, np.int64)
+
+
+def cogroup_asof(
+    l: DataFrame,
+    r: DataFrame,
+    left_keys: list[str],
+    right_keys: list[str],
+    coarse_buckets: int | str | None,
+    out_schema: T.StructType,
+    kernel,
+) -> DataFrame:
+    """Co-group the left side ``l`` with the ``__r_``-aliased right side
+    ``r`` and run ``kernel(lpdf, rpdf, lcodes, rcodes, base, block)`` on each
+    Arrow batch, in the composite index of kernels.composite_frame.
+
+    ``coarse_buckets=N`` groups on ``hash(keys) % N`` (many keys per batch;
+    ``"auto"`` sizes N with ``auto_buckets``); ``None`` groups on the raw
+    keys (one key per batch, so a co-bucketed scan needs no exchange). Either
+    way the keys are factorized inside the batch, and a batch whose
+    composite index would pass 2**62 runs the same kernel once per key-code
+    chunk."""
+    empty_cols = [f.name for f in out_schema.fields]
+
+    def fn(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(lpdf):
+            return pd.DataFrame(columns=empty_cols)
+        rpdf = rpdf.rename(columns=lambda c: c[4:] if c.startswith("__r_") else c)
+        lcodes, rcodes = factorize_keys(lpdf, rpdf, left_keys, right_keys)
+        base, block = composite_frame(ts_us_array(lpdf), ts_us_array(rpdf))
+        pieces = [
+            kernel(lpdf.iloc[qi], rpdf.iloc[ri], lc, rc, base, block)
+            for qi, ri, lc, rc in key_code_chunks(lcodes, rcodes, block)
+        ]
+        return pieces[0] if len(pieces) == 1 else pd.concat(pieces)
+
+    if coarse_buckets == "auto":
+        coarse_buckets = auto_buckets(l.sparkSession)
+    if coarse_buckets:
+        lb = l.withColumn("__b", F.pmod(F.xxhash64(*left_keys), F.lit(coarse_buckets)))
+        rb = r.withColumn("__r___b", F.pmod(F.xxhash64(*[f"__r_{c}" for c in right_keys]), F.lit(coarse_buckets)))
+        grouped = lb.groupby(F.col("__b")).cogroup(rb.groupby(F.col("__r___b")))
+    else:
+        grouped = l.groupby(*[F.col(c) for c in left_keys]).cogroup(
+            r.groupby(*[F.col(f"__r_{c}") for c in right_keys])
+        )
+    return grouped.applyInPandas(fn, schema=out_schema)
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -156,10 +235,10 @@ def asof_join(
     keys, and inside each Arrow batch the whole-bucket vectorized kernel
     (compute_parts_multikey) resolves every key's windows in one pass —
     measured 2× end-to-end over per-key cogroup even where the per-key
-    grouping could reuse an upstream exchange, and 10× in the kernel itself.
-    ``"auto"`` (default) sizes N to 4× the session's shuffle partitions;
-    ``None`` forces one cogroup group per key (exchange-reuse-friendly,
-    per-key kernels).
+    grouping could reuse an upstream exchange. ``"auto"`` (default) sizes N
+    with ``auto_buckets``; ``None`` cogroups on the raw keys, one key per
+    batch through the same kernel (what lets co-bucketed tables join with
+    zero exchanges, sources/bucketed.py).
     """
     key_mapping = key_mapping or {k: k for k in gb.keys}
     left_keys = list(key_mapping.keys())
@@ -181,12 +260,6 @@ def asof_join(
         return apply_derivations(dec_post(out, prefix), gb.derivations)
     if prefilter:
         right = prefilter_right_keys(left, right, key_mapping, mode=prefilter)
-    if coarse_buckets == "auto":
-        try:
-            sp = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
-        except ValueError:  # conf can be the string "auto" under AQE-managed envs
-            sp = left.sparkSession.sparkContext.defaultParallelism or 64
-        coarse_buckets = max(sp * 4, 64)
 
     parts = gb.parts()
     right_types = {f.name: f.dataType for f in right.schema.fields}
@@ -216,86 +289,15 @@ def asof_join(
     feat_names = [f.name for f in feat_fields]
     part_list = list(parts)
 
-    def one_key(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        ec = EventColumns(rpdf, _TS_US, tie)
-        q_ts = lpdf[_TS_US].to_numpy("int64")
-        feats = compute_parts(ec, part_list, q_ts, include_equal, sawtooth)
+    def kernel(lpdf, rpdf, lcodes, rcodes, base, block) -> pd.DataFrame:
+        mec = MultiKeyEventColumns(rpdf, rcodes, ts_us_array(rpdf), tie, base, block)
+        feats = compute_parts_multikey(mec, part_list, lcodes, ts_us_array(lpdf), include_equal, sawtooth)
         out = lpdf[left_cols].copy()
         for p, fname in zip(part_list, feat_names):
             out[fname] = feats[p.output_name]
         return out
 
-    def fn(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf):
-            return pd.DataFrame(columns=left_cols + feat_names)
-        rpdf = rpdf.rename(columns=lambda c: c[4:] if c.startswith("__r_") else c)
-        return one_key(lpdf, rpdf)
-
-    def fn_multikey(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        """Whole-bucket vectorized path: one composite-index searchsorted
-        resolves every query's window across ALL keys in the Arrow batch —
-        no per-key pandas slicing (5-10x on many-small-keys workloads)."""
-        if len(left_keys) == 1:
-            joint = pd.concat([lpdf[left_keys[0]], rpdf[right_keys[0]]], ignore_index=True)
-            codes = pd.factorize(joint, use_na_sentinel=True)[0]
-        else:
-            arrays = [
-                pd.concat([lpdf[lk], rpdf[rk]], ignore_index=True)
-                for lk, rk in zip(left_keys, right_keys)
-            ]
-            codes = pd.MultiIndex.from_arrays(arrays).factorize()[0]
-        lcodes, rcodes = codes[: len(lpdf)], codes[len(lpdf) :]
-        q_ts = lpdf[_TS_US].to_numpy("int64")
-        r_ts = rpdf[_TS_US].to_numpy("int64") if len(rpdf) else np.empty(0, "int64")
-        lo = int(min(q_ts.min(), r_ts.min())) if len(r_ts) else int(q_ts.min())
-        hi = int(max(q_ts.max(), r_ts.max())) if len(r_ts) else int(q_ts.max())
-        base = (lo // _US_D) * _US_D  # day-aligned: sawtooth rounding commutes
-        block = (hi - base) + 2
-        if (int(codes.max(initial=0)) + 2) * block > 2**62:
-            raise _MapInput("composite-index overflow")  # fall back per-key
-        mec = MultiKeyEventColumns(rpdf, rcodes, r_ts, tie, base, block)
-        feats = compute_parts_multikey(mec, part_list, lcodes, q_ts, include_equal, sawtooth)
-        out = lpdf[left_cols].copy()
-        for p, fname in zip(part_list, feat_names):
-            out[fname] = feats[p.output_name]
-        return out
-
-    def fn_bucketed(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        """One Arrow batch holds MANY keys: the composite-index kernel covers
-        scalar, bucketed, AND map-typed parts; only composite overflow
-        (pathological ts span × key count) falls back to per-key kernels."""
-        if not len(lpdf):
-            return pd.DataFrame(columns=left_cols + feat_names)
-        rpdf = rpdf.rename(columns=lambda c: c[4:] if c.startswith("__r_") else c)
-        try:
-            return fn_multikey(lpdf, rpdf)
-        except _MapInput:
-            pass
-
-        def norm(k):
-            return k if isinstance(k, tuple) else (k,)
-
-        r_groups = (
-            {norm(k): df for k, df in rpdf.groupby(right_keys, sort=False)} if len(rpdf) else {}
-        )
-        empty_r = rpdf.iloc[0:0]
-        pieces = []
-        # dropna=False: left rows with null keys must still emit (with null
-        # features) — the one-row-per-left-row invariant
-        for k, lsub in lpdf.groupby(left_keys, sort=False, dropna=False):
-            pieces.append(one_key(lsub, r_groups.get(norm(k), empty_r)))
-        return pd.concat(pieces, ignore_index=False)
-
-    if coarse_buckets:
-        lb = l.withColumn("__b", F.pmod(F.xxhash64(*left_keys), F.lit(coarse_buckets)))
-        rb = r.withColumn("__r___b", F.pmod(F.xxhash64(*[f"__r_{c}" for c in right_keys]), F.lit(coarse_buckets)))
-        grouped = lb.groupby(F.col("__b")).cogroup(rb.groupby(F.col("__r___b")))
-        out = grouped.applyInPandas(fn_bucketed, schema=out_schema)
-    else:
-        grouped = l.groupby(*[F.col(c) for c in left_keys]).cogroup(
-            r.groupby(*[F.col(f"__r_{c}") for c in right_keys])
-        )
-        out = grouped.applyInPandas(fn, schema=out_schema)
+    out = cogroup_asof(l, r, left_keys, right_keys, coarse_buckets, out_schema, kernel)
     return apply_derivations(out, gb.derivations)
 
 

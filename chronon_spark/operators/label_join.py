@@ -45,7 +45,6 @@ def label_join(
     left_time_column: str = "ts",
     key_mapping: dict[str, str] | None = None,
     prefix: str | None = None,
-    coarse_buckets: int | str | None = "auto",
     prefilter: str | None = None,
 ) -> DataFrame:
     """One output row per left row; one column per AggregationPart, computed
@@ -94,7 +93,6 @@ def label_join(
         gb2,
         left_time_column=_NEG_TS,
         key_mapping=key_mapping,
-        coarse_buckets=coarse_buckets,
         prefilter=prefilter,
     )
     # Single aliased select (NOT sequential renames: with both FIRST and LAST

@@ -161,6 +161,23 @@ def _parquet_rows(part_dir: str) -> int:
     return total
 
 
+def range_stage_metrics(ds_range: list[str], range_wall: float, ds_counts: dict[str, int]) -> dict[str, dict]:
+    """Per-ds ``stage_metrics`` of one range job. Each ds records its share
+    of the range's wall time, in proportion to its left rows, so the per-ds
+    ``wall_sec`` of a range sum to its ``range_wall_sec`` and
+    ``partition_stats`` totals count every job once."""
+    rows = sum(ds_counts[ds] for ds in ds_range)
+    return {
+        ds: {
+            "wall_sec": round(range_wall * ds_counts[ds] / rows, 6),
+            "range_wall_sec": range_wall,
+            "range": [ds_range[0], ds_range[-1]],
+            "range_days": len(ds_range),
+        }
+        for ds in ds_range
+    }
+
+
 def run_partitioned_backfill(
     spark: SparkSession,
     events_path: str,
@@ -300,6 +317,7 @@ def run_partitioned_backfill(
             part_paths = {ds: f"{out_path}/ds={ds}" for ds in ds_range}  # logical refs
         # manifests land only after the WHOLE range's write committed
         # (output-before-manifest = commit marker, same as the per-ds form)
+        metrics = range_stage_metrics(ds_range, range_wall, ds_counts)
         for ds in ds_range:
             n_out = ds_out.get(ds, 0)
             total_out += n_out
@@ -308,19 +326,14 @@ def run_partitioned_backfill(
                 "engine_version": ENGINE_VERSION,
                 "semantic_hash": gb_hash,
                 "inputs": {
-                    "events": {"path": events_path, "scan_max_exclusive": f"{ds}+1d",
+                    # one scan served the whole range
+                    "events": {"path": events_path, "scan_max_exclusive": f"{ds_hi}+1d",
                                "rewind_ms": mw_ms},
                     "queries": {"path": queries_path, "rows": ds_counts[ds]},
                 },
                 "output": {"path": part_paths[ds], "rows": n_out},
                 "spec": spec_meta,
-                "stage_metrics": {
-                    # wall_sec is the RANGE's job wall (shared by its days) —
-                    # field kept so partition_stats and older manifests agree
-                    "wall_sec": range_wall,
-                    "range": [ds_lo, ds_hi],
-                    "range_days": len(ds_range),
-                },
+                "stage_metrics": metrics[ds],
                 "completed_at_unix": int(time.time()),
             }
             tmp = os.path.join(checkpoint_dir, f".{ds}.json.tmp")

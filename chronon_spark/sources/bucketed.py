@@ -11,11 +11,13 @@ over two co-bucketed tables runs with ZERO exchanges — verified by plan
 assertion in tests/test_bucketed.py (the alias projection the join inserts
 is partitioning-preserving: ProjectExec is alias-aware).
 
-Trade-off vs the default coarse-bucket path: per-raw-key cogroup groups
-forgo the whole-bucket multikey kernel's Python-side vectorization. At
-bench scale the kernel dominates and coarse buckets win; at cluster scale
-the exchange dominates (network + spill over terabytes) and co-located
-buckets win. Both paths produce identical values (equivalence-tested).
+Trade-off vs the default coarse-bucket path: both run the same multi-key
+kernel (asof_join.cogroup_asof), but a raw-key cogroup hands it one key per
+Arrow group, so the per-group cost (Arrow batch, factorize, kernel
+dispatch) is paid per key instead of once per bucket of many keys. At bench
+scale that overhead dominates and coarse buckets win; at cluster scale the
+exchange dominates (network + spill over terabytes) and co-located buckets
+win. Both paths produce identical values (equivalence-tested).
 
 The reference engine leans on Hive-partitioned unbucketed tables and pays
 the shuffle per job (spark/.../GroupBy.scala renders a repartition per

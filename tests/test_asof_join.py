@@ -4,8 +4,11 @@ conv_id × ts, strict ts' < ts, stable (ts, turn_idx) ordering."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from chronon_spark.api import Accuracy, Aggregation, GroupBy, Join, JoinPart, Op, Window
 from chronon_spark.operators.asof_join import asof_join, compute_join
@@ -204,12 +207,13 @@ def test_output_cardinality_equals_left(spark, data):
 
 
 def test_composite_keys(spark, data):
-    """Multi-column group-by keys through both cogroup modes (per-key and
+    """Multi-column group-by keys through both cogroup modes (raw-key and
     coarse-bucket) — the key tuple, not any single column, is the entity."""
     ev, q = data
-    # queries carry a role column drawn from the event stream
+    # queries carry a role column drawn from the event stream; every 13th
+    # is null (a partly-null key tuple matches no event: null features)
     q2 = q.copy()
-    q2["role"] = [ev["role"].iloc[i % len(ev)] for i in range(len(q2))]
+    q2["role"] = [None if i % 13 == 0 else ev["role"].iloc[i % len(ev)] for i in range(len(q2))]
     gb = GroupBy(
         keys=["conv_id", "role"],
         aggregations=[
@@ -219,7 +223,7 @@ def test_composite_keys(spark, data):
         tie_breakers=["turn_idx"],
     )
     want = naive_features(ev, q2, gb)
-    for kw in ({}, {"coarse_buckets": 16}):
+    for kw in ({"coarse_buckets": None}, {"coarse_buckets": 16}):
         got = asof_join(spark.createDataFrame(q2), spark.createDataFrame(ev), gb, **kw).toPandas()
         assert_frames_allclose(got, want, sort_by=["query_id"])
 
@@ -275,3 +279,63 @@ def test_per_turn_text_stable_under_repartition(spark):
         for r in t2.select("conv_id", "turn_idx", "text").collect()
     }
     assert got == base
+
+
+def test_composite_overflow_splits_key_chunks(spark):
+    """A batch whose time span times its key count passes 2**62 cannot share
+    one composite index: the cogroup splits it into key-code chunks and runs
+    the same kernel per chunk. Every key has events ~60k years apart (bigint
+    millis), so any batch of >= 2 keys overflows — the plain join with one
+    coarse bucket (all keys in a batch) and the tiled join's auto buckets
+    both take the split path, and must still match the oracle row for row."""
+    from chronon_spark.operators.asof_join import auto_buckets
+    from chronon_spark.operators.tiles import tiled_sawtooth_asof_join
+
+    ms_h, far_ms = 3_600_000, 60_000 * 365 * 86_400_000
+    ev_rows, q_rows = [], []
+    for i in range(24):
+        for epoch in (1_704_067_200_000, 1_704_067_200_000 + far_ms):
+            t0 = epoch + i * 86_400_000
+            for j in range(30):
+                # whole minutes + 7 s: far from hop boundaries at any magnitude
+                ev_rows.append((f"k{i}", t0 + j * 37 * 60_000 + 7_000, j, float((i * 7 + j) % 11)))
+            for j in range(4):
+                q_rows.append((f"k{i}", t0 + (j * 5 + 3) * ms_h + 7_000, f"q{len(q_rows)}"))
+            if i % 8 == 0:  # null-key left rows: kept, with null features
+                q_rows.append((None, t0 + 5 * ms_h, f"q{len(q_rows)}"))
+    ev = pd.DataFrame(ev_rows, columns=["conv_id", "ts", "turn_idx", "v"])
+    q = pd.DataFrame(q_rows, columns=["conv_id", "ts", "query_id"])
+    span_us = (ev["ts"].max() - ev["ts"].min()) * 1000
+    assert 3 * span_us > 2**62  # two keys and the block's slack overflow
+    n_buckets = auto_buckets(spark)
+    hashed = (
+        spark.createDataFrame(q)
+        .where(F.col("conv_id").isNotNull())
+        .select(F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).alias("b"))
+    )
+    assert hashed.distinct().count() < q["conv_id"].nunique()  # some auto bucket holds >= 2 keys
+
+    def oracle(gb):
+        as_dt = {"ts": lambda d: d["ts"].to_numpy().astype("datetime64[ms]")}
+        return naive_features(ev.assign(**as_dt), q.assign(**as_dt), gb).drop(columns="ts")
+
+    aggs = [
+        Aggregation("v", Op.COUNT, windows=("1d",)),
+        Aggregation("v", Op.SUM, windows=("12h", "7d")),
+        Aggregation("v", Op.MAX, windows=("1d",)),
+        Aggregation("v", Op.LAST_K, windows=("1d",), k=3),
+    ]
+    # lifetime windows span a key's whole block, so one unsplit composite
+    # index would wrap int64 inside some key's window; tiles need bounded ones
+    lifetime = [Aggregation("v", Op.COUNT, windows=(None,))]
+    left, right = spark.createDataFrame(q), spark.createDataFrame(ev)
+    for sawtooth in (False, True):
+        gb = GroupBy(keys=["conv_id"], aggregations=aggs + lifetime, tie_breakers=["turn_idx"], sawtooth=sawtooth)
+        runs = [(asof_join(left, right, gb, coarse_buckets=1), gb)]
+        if sawtooth:
+            gb_t = replace(gb, aggregations=aggs)
+            runs.append((tiled_sawtooth_asof_join(left, right, gb_t), gb_t))
+        for out, spec in runs:
+            got = out.toPandas()
+            assert len(got) == len(q)
+            assert_frames_allclose(got.drop(columns="ts"), oracle(spec), sort_by=["query_id"])

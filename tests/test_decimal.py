@@ -253,3 +253,47 @@ def test_decimal_upload_rejected(spark, frames):
     )
     with pytest.raises(ValueError, match="fractional DECIMAL"):
         build_batch_irs(ev, gb, 1_704_067_200_000_000)
+
+
+@pytest.mark.parametrize(
+    "scale,base",
+    [
+        # 17 significant digits at scale 8 (unscaled 12345678901234567)
+        (8, Decimal("123456789.01234567")),
+        # 18 fractional digits (unscaled 123456789012345678)
+        (18, Decimal("0.123456789012345678")),
+    ],
+)
+def test_decimal_high_scale_exact(spark, scale, base):
+    """Rescaling the unscaled int64 back to DECIMAL(38, s) must keep every
+    fractional digit: at scale >= 7 a too-wide dividend made Spark clamp the
+    quotient to scale 6 and round silently."""
+    ulp = Decimal(1).scaleb(-scale)
+    rows = [
+        ("a", (pd.Timestamp("2024-01-01") + pd.Timedelta(hours=i)).to_pydatetime(), i, base + i * ulp)
+        for i in range(3)
+    ]
+    ev = spark.createDataFrame(
+        rows,
+        T.StructType([
+            T.StructField("conv_id", T.StringType()), T.StructField("ts", T.TimestampType()),
+            T.StructField("turn_idx", T.IntegerType()), T.StructField("amt", T.DecimalType(18, scale)),
+        ]),
+    )
+    q = spark.createDataFrame(
+        [("a", pd.Timestamp("2024-01-01 05:00").to_pydatetime())], "conv_id string, ts timestamp"
+    )
+    gb = GroupBy(
+        keys=["conv_id"],
+        aggregations=[
+            Aggregation("amt", Op.SUM, windows=("1d",)),
+            Aggregation("amt", Op.MIN, windows=("1d",)),
+            Aggregation("amt", Op.LAST, windows=("1d",)),
+        ],
+        tie_breakers=["turn_idx"],
+    )
+    out = asof_join(q, ev, gb).collect()[0]
+    vals = [r[3] for r in rows]
+    assert out["amt_sum_1d"] == sum(vals)
+    assert out["amt_min_1d"] == min(vals)
+    assert out["amt_last_1d"] == vals[-1]

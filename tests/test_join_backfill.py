@@ -269,6 +269,8 @@ def test_step_days_chunking_equality_and_resume(spark, paths):
         assert m["stage_metrics"]["range_days"] == 2
         assert m["stage_metrics"]["range"][0] <= m["ds"] <= m["stage_metrics"]["range"][1]
         assert m["output"]["rows"] > 0
+        # the one events scan covered the whole range
+        assert m["inputs"]["events"]["scan_max_exclusive"] == f"{m['stage_metrics']['range'][1]}+1d"
     # kill/rerun: dropping ONE manifest recomputes exactly that partition
     os.remove(root / "ckpt_d30" / manifests[0])
     again = run_partitioned_backfill(
@@ -282,3 +284,37 @@ def test_step_days_chunking_equality_and_resume(spark, paths):
         c[cols].sort_values("query_id").reset_index(drop=True),
         check_like=True,
     )
+
+
+def test_per_ds_wall_sums_to_range_wall(spark, paths):
+    """One range job fills several ds: each per-ds manifest records its share
+    of the range's wall time (by left rows), so partition_stats' per-ds
+    wall_sec sum to the range wall instead of counting it once per day."""
+    import json
+    import os
+
+    from chronon_spark.plans.manifest import partition_stats, range_stage_metrics
+
+    ev_p, q_p, root = paths
+    out, ckpt = str(root / "out_wall"), str(root / "ckpt_wall")
+    stats = run_partitioned_backfill(spark, ev_p, q_p, out, ckpt, join_builder=_builder, step_days=30)
+    assert stats["ranges_computed"] == 1 and stats["partitions_computed"] == 2
+    ms = []
+    for fn in sorted(f for f in os.listdir(ckpt) if f.endswith(".json")):
+        with open(os.path.join(ckpt, fn)) as f:
+            ms.append(json.load(f))
+    range_wall = ms[0]["stage_metrics"]["range_wall_sec"]
+    assert range_wall > 0 and all(m["stage_metrics"]["range_wall_sec"] == range_wall for m in ms)
+    walls = {m["ds"]: m["stage_metrics"]["wall_sec"] for m in ms}
+    assert all(0 < w < range_wall for w in walls.values())
+    assert sum(walls.values()) == pytest.approx(range_wall, abs=1e-5)
+    # shares follow the left rows of each ds
+    rows = {m["ds"]: m["inputs"]["queries"]["rows"] for m in ms}
+    for ds, w in walls.items():
+        assert w == pytest.approx(range_wall * rows[ds] / sum(rows.values()), abs=1e-5)
+    st = partition_stats(spark, out, ckpt).collect()
+    assert sum(r["wall_sec"] for r in st) == pytest.approx(range_wall, abs=1e-5)
+    # unit form: three days with 1:2:1 left rows
+    split = range_stage_metrics(["d1", "d2", "d3"], 8.0, {"d1": 1, "d2": 2, "d3": 1})
+    assert [split[d]["wall_sec"] for d in ("d1", "d2", "d3")] == [2.0, 4.0, 2.0]
+    assert all(split[d]["range"] == ["d1", "d3"] and split[d]["range_days"] == 3 for d in split)

@@ -14,7 +14,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from chronon_spark.aggregators.kernels import EventColumns, compute_parts
+from chronon_spark.aggregators.kernels import MultiKeyEventColumns, composite_frame, compute_parts_multikey
 from chronon_spark.api import Aggregation, GroupBy, Op
 from tests.oracle import _agg_slice
 from chronon_spark.resolution import tail_hop_millis
@@ -38,6 +38,14 @@ OPS = [
 ]
 
 US_H = 3_600_000_000
+
+
+def _single_key_kernel(events: pd.DataFrame, ts_col: str, parts, q_ts, include_equal, sawtooth):
+    """The multi-key kernel on a batch of one key: every key code is 0."""
+    r_ts = events[ts_col].to_numpy(np.int64)
+    base, block = composite_frame(q_ts, r_ts)
+    mec = MultiKeyEventColumns(events, np.zeros(len(events), np.int64), r_ts, [], base, block)
+    return compute_parts_multikey(mec, parts, np.zeros(len(q_ts), np.int64), q_ts, include_equal, sawtooth)
 
 
 @st.composite
@@ -76,10 +84,9 @@ def _oracle(part, ev_ts, vals, q, include_equal, sawtooth):
 def test_kernels_match_bruteforce(data, include_equal, sawtooth):
     ev_ts, q_ts, vals = data
     events = pd.DataFrame({"__ts_us": ev_ts, "v": pd.Series(vals, dtype="float64")})
-    ec = EventColumns(events, "__ts_us", [])
     gb = GroupBy(keys=["k"], aggregations=OPS, include_equal=include_equal, sawtooth=sawtooth)
     parts = gb.parts()
-    got = compute_parts(ec, parts, q_ts, include_equal, sawtooth)
+    got = _single_key_kernel(events, "__ts_us", parts, q_ts, include_equal, sawtooth)
     for part in parts:
         for i, q in enumerate(q_ts):
             want = _oracle(part, ev_ts, vals, q, include_equal, sawtooth)
@@ -141,10 +148,9 @@ def test_integral_decimal_kernels_exact(data, include_equal):
     A float64 anywhere in the pipeline fails this by construction."""
     ev_ts, q_ts, vals = data
     events = pd.DataFrame({"__ts_us": ev_ts, "v": pd.Series(vals, dtype=object)})
-    ec = EventColumns(events, "__ts_us", [])
     gb = GroupBy(keys=["k"], aggregations=_DEC_OPS, include_equal=include_equal)
     parts = gb.parts()
-    got = compute_parts(ec, parts, q_ts, include_equal, sawtooth=False)
+    got = _single_key_kernel(events, "__ts_us", parts, q_ts, include_equal, sawtooth=False)
     for part in parts:
         for i, q in enumerate(q_ts):
             m = ev_ts <= q if include_equal else ev_ts < q

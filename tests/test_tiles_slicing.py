@@ -235,7 +235,8 @@ def test_sliced_sawtooth_boundary(spark, tdf):
 
 def test_coarse_buckets_equal_per_key(spark, tdf):
     """coarse_buckets batches many keys per Arrow group — values must be
-    identical to the per-key cogroup, including left rows with NULL keys."""
+    identical to the raw-key cogroup (one key per Arrow group), including
+    left rows with NULL keys."""
     gb = GroupBy(
         keys=["conv_id"],
         aggregations=[
@@ -251,14 +252,14 @@ def test_coarse_buckets_equal_per_key(spark, tdf):
         .withColumn("conv_id", F.when(F.col("turn_idx") % 97 == 0, None).otherwise(F.col("conv_id")))
     )
     feats = [p.output_name for p in gb.parts()]
-    plain = _collect(asof_join(left, tdf, gb), feats)
+    raw_key = _collect(asof_join(left, tdf, gb, coarse_buckets=None), feats)
     coarse = _collect(asof_join(left, tdf, gb, coarse_buckets=64), feats)
-    for df in (plain, coarse):
+    for df in (raw_key, coarse):
         df["text_last_k2_1d"] = df["text_last_k2_1d"].map(lambda v: tuple(v) if v is not None else v)
     # align: conv_id may be null — sort on turn_idx too
-    plain = plain.sort_values(["conv_id", "turn_idx"], na_position="first").reset_index(drop=True)
+    raw_key = raw_key.sort_values(["conv_id", "turn_idx"], na_position="first").reset_index(drop=True)
     coarse = coarse.sort_values(["conv_id", "turn_idx"], na_position="first").reset_index(drop=True)
-    _assert_same(plain, coarse)
+    _assert_same(raw_key, coarse)
 
 
 def test_sliced_rejects_unbounded(tdf):

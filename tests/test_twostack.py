@@ -9,7 +9,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from chronon_spark.aggregators.kernels import EventColumns, compute_parts
+from chronon_spark.aggregators.kernels import MultiKeyEventColumns, composite_frame, compute_parts_multikey
 from chronon_spark.aggregators.twostack import compute_parts_twostack
 from chronon_spark.api import Aggregation, GroupBy, Op
 
@@ -41,13 +41,20 @@ def _parts():
     return gb.parts()
 
 
+def _single_key_kernel(events: pd.DataFrame, ts_col: str, parts, q_ts, include_equal, sawtooth):
+    """The multi-key kernel on a batch of one key: every key code is 0."""
+    r_ts = events[ts_col].to_numpy(np.int64)
+    base, block = composite_frame(q_ts, r_ts)
+    mec = MultiKeyEventColumns(events, np.zeros(len(events), np.int64), r_ts, [], base, block)
+    return compute_parts_multikey(mec, parts, np.zeros(len(q_ts), np.int64), q_ts, include_equal, sawtooth)
+
+
 @pytest.mark.parametrize("include_equal", [False, True])
 @pytest.mark.parametrize("sawtooth", [False, True])
 def test_twostack_matches_kernels(include_equal, sawtooth):
     ts, vals, q = _fixture()
     parts = _parts()
-    ec = EventColumns(pd.DataFrame({"__ts": ts, "v": vals}), "__ts", [])
-    want = compute_parts(ec, parts, q, include_equal, sawtooth)
+    want = _single_key_kernel(pd.DataFrame({"__ts": ts, "v": vals}), "__ts", parts, q, include_equal, sawtooth)
     got = compute_parts_twostack(ts, {"v": vals}, parts, q, include_equal, sawtooth)
     for p in parts:
         a, b = got[p.output_name], want[p.output_name]
